@@ -20,6 +20,14 @@ object Sessions {
       // native function registration (rolling_hash et al.)
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      // keep a repeated run's generated classes resident. One run of
+      // the five benchmark curation stages needs ~220 distinct classes;
+      // Spark's default cache holds 100 (as 4 LRU segments of 25), so it
+      // evicted each class before the next run reused it and every warm
+      // run recompiled ~160 of them. 1,000 leaves headroom for uneven
+      // segments and larger module sets. A static conf: CodeGenerator
+      // reads it once, at the JVM's first compile, so it goes here.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
 
   def local(cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt): SparkSession = {
     val spark = configure(

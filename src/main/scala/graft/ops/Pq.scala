@@ -324,10 +324,20 @@ object Pq {
     * CollapseProject from inlining — and thereby duplicating — the
     * non-cheap `pq_encode`, so the corpus is argmin-encoded exactly
     * once per row (PqPlanSpec pins the single encode site).
+    *
+    * Rows whose dimension is not the codebook's (empty or ragged) are
+    * dropped before any code or cell key is derived. They have no
+    * valid code (`pq_encode` nulls them, or misreads the geometry when
+    * their dimension divides the codebook's), and two of them would
+    * otherwise meet on the −1 cell sentinel ([[Similarity.cellOf]]).
+    * The fit rejects such rows loudly only inside its training sample.
+    * The filter reads the raw column, so no `IsNotNull` over the
+    * computed keys is inferred (DegenerateRowsSpec).
     */
   private[ops] def encoded(embeddings: DataFrame, b: Codebook): DataFrame =
     Spread(embeddings)
       .select(col("vec_id"), col("embedding").as("v"))
+      .filter(size(col("v")) === b.m * b.subDim)
       .withColumn("norm", sqrt(Similarity.dot(col("v"), col("v"))))
       .withColumn("codes", codesOf(col("v"), b))
       .withColumn("pcodes", call_function("pq_pack", col("codes")))

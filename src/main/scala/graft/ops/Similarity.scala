@@ -481,13 +481,12 @@ object Similarity {
     // fuses into the surrounding codegen stage
     val byDist = Window.partitionBy(col("vec_id"))
       .orderBy(col("d2"), col("cell"))
-    // normalize BEFORE the centroid cross join: unitOf is a HOF
-    // normalize (fold + per-element divide) and the join multiplies
-    // every stream row by nCells — projecting it under the join
-    // evaluates it once per VECTOR instead of once per
-    // (vector × centroid) pair (measured: inside the join it put the
-    // 100×-corpus probe derivation at ~200 s vs ~16 s — nCells≈450
-    // redundant normalizations per row on the ANN hot path)
+    // normalize BEFORE the centroid cross join: unitOf is the native
+    // `unit_d` projection (a norm pass plus a per-element divide) and
+    // the join multiplies every stream row by nCells — projecting it
+    // under the join evaluates it once per VECTOR instead of once per
+    // (vector × centroid) pair, ~nCells fewer normalizations per
+    // vector on the ANN hot path
     vecs.select(col("vec_id"), unitOf(col("v")).as("uv"))
       .crossJoin(broadcast(centroids.select(col("cell"), col("cvec"))))
       .withColumn("d2", call_function("dist2_d", col("uv"), col("cvec")))
